@@ -103,12 +103,66 @@ def test_skew_doc_pages_spread_across_partitions(frames):
     assert n_parts > 1, "giant document stayed on one partition"
 
 
-def test_spread_disabled_is_byte_identical(frames):
-    """The spread dial must never change output bytes, only placement."""
+@pytest.mark.parametrize("page_spread", [False, True], ids=["spread_off", "spread_on"])
+def test_spread_disabled_is_byte_identical(frames, page_spread):
+    """The spread dial must never change output bytes, only placement:
+    both settings stay pinned to the oracle on the giant documents."""
     pages, _, _, expected_docs, _ = frames
-    docs = extract_documents(pages, PipelineConfig(page_spread=True))
+    docs = extract_documents(pages, PipelineConfig(page_spread=page_spread))
     assert docs.join(expected_docs, DOC_KEYS, "left_anti").count() == 0
     assert expected_docs.join(docs, DOC_KEYS, "left_anti").count() == 0
+
+
+def _plan_nodes(df, name: str) -> list:
+    """Indices of the physical-plan lines whose operator is ``name``."""
+    plan = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    return [
+        i for i, line in enumerate(plan)
+        if line.lstrip("+-: *(0123456789) ").startswith(name)
+    ]
+
+
+@pytest.fixture(scope="module")
+def sharded_pages(spark, frames, tmp_path_factory):
+    """The fixture pages as one file per core, so the unsplittable-input
+    guard stays off as on a well-laid-out corpus."""
+    path = str(tmp_path_factory.mktemp("sharded") / "pages")
+    frames[0].repartition(spark.sparkContext.defaultParallelism).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_default_plan_is_one_python_pass_one_exchange(sharded_pages):
+    """Default extraction: every pdf linearizes inside the stage-1 UDF,
+    so the plan has one Python pass and only the groupBy(url) exchange."""
+    df = extract_documents(sharded_pages, PipelineConfig(anchor_budget=4001))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(_plan_nodes(df, "ArrowEvalPython")) == 1
+    assert "linearize_anchor_udf" not in plan
+    exchanges = [l for l in plan.splitlines() if "Exchange" in l]
+    assert len(exchanges) == 1 and "ENSURE_REQUIREMENTS" in exchanges[0]
+
+
+def test_page_spread_plan_keeps_two_passes_two_exchanges(sharded_pages):
+    """page_spread=True keeps the skew-spread plan: stage-1 UDF, the
+    repartition(url, page) exchange, the linearize UDF, then assembly."""
+    df = extract_documents(
+        sharded_pages, PipelineConfig(anchor_budget=4001, page_spread=True)
+    )
+    assert len(_plan_nodes(df, "ArrowEvalPython")) == 2
+    assert len(_plan_nodes(df, "Exchange")) == 2
+
+
+def test_salt_replaces_unsplittable_guard(frames):
+    """On a single-file input the guard would spread the blobs; with
+    salt_buckets the salt repartition is the ONLY exchange before the
+    parse — two blob shuffles are never stacked. Catalyst collapses
+    adjacent repartitions, so the analyzed plan is checked as well."""
+    df = extract_documents(frames[0], PipelineConfig(anchor_budget=4001, salt_buckets=4))
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("RepartitionByExpression") == 1
+    (parse,) = _plan_nodes(df, "ArrowEvalPython")
+    below_parse = [i for i in _plan_nodes(df, "Exchange") if i > parse]
+    assert len(below_parse) == 1
 
 
 def test_shuffles_carry_no_blob(frames):
@@ -171,7 +225,8 @@ def test_assembly_page_order(spark):
 
 
 def test_anchor_budget_config(spark, fixture_dir):
-    """PipelineConfig.anchor_budget reaches the linearize UDF."""
+    """PipelineConfig.anchor_budget reaches the stage-1 UDF, which
+    linearizes every pdf on the default path."""
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
     tiny = extract_pages(pages, PipelineConfig(anchor_budget=19))
     anchors = (

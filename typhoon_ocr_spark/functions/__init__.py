@@ -8,7 +8,6 @@ UDFs. Anything expressible with pyspark.sql.functions stays JVM-side.
 from .udfs import (
     sniff_kind_col,
     stage_pages_udf,
-    parse_pdf_pages_udf,
     linearize_anchor_udf,
     strip_html_udf,
     parse_response_udf,
@@ -22,7 +21,6 @@ from .udfs import (
 __all__ = [
     "sniff_kind_col",
     "stage_pages_udf",
-    "parse_pdf_pages_udf",
     "linearize_anchor_udf",
     "strip_html_udf",
     "parse_response_udf",

@@ -151,9 +151,7 @@ def _parse_pdf_rows(url: str, blob: bytes, budget: int, spread_threshold: int) -
     if not reports:
         return [_page_row(1, error="empty pdf")]
     if len(reports) <= spread_threshold:
-        # Bounded-size document: linearize where parsed — no element IR
-        # ever leaves this task, and the downstream shuffle carries only
-        # the budget-capped anchor strings.
+        # linearize where parsed: no element IR ever leaves this task
         return [
             _page_row(
                 idx,
@@ -185,10 +183,10 @@ def stage_pages_udf(
     spread_threshold: pd.Series,
 ) -> pd.Series:
     """Stage-1 of the pipeline, one pass over the raw payloads:
-    pdf → per-page anchors (documents up to ``spread_threshold`` pages
-    linearize inline; larger ones emit layout IR for the skew-spread
-    path — the content-stream interpreter stands in for the reference's
-    pypdf visitor pass, ocr_utils.py:358-388);
+    pdf → per-page anchors, linearized where parsed (only documents
+    above ``spread_threshold`` pages emit layout IR instead, for the
+    opt-in page-spread path — the content-stream interpreter stands in
+    for the reference's pypdf visitor pass, ocr_utils.py:358-388);
     html → single page carrying the boilerplate-stripped text;
     junk → single failed page row.
 
@@ -219,16 +217,6 @@ def stage_pages_udf(
     return pd.Series(
         [one(*args) for args in zip(url, kind, payload, budget, spread_threshold)],
         dtype="object",
-    )
-
-
-@pandas_udf(ArrayType(PAGE_STRUCT))
-def parse_pdf_pages_udf(payload: pd.Series) -> pd.Series:
-    """BINARY pdf payload → array of per-page layout IR structs
-    (standalone IR-only form of the pdf branch of stage_pages_udf)."""
-    return payload.map(
-        lambda blob: _parse_pdf_rows("", bytes(blob), 0, 0) if blob is not None
-        else [_page_row(1, error="null payload")]
     )
 
 

@@ -5,15 +5,17 @@ arranged as a SINGLE lineage so the source is scanned exactly once:
 
     read pages(url, warc_ts, html, text, lang)
       → kind = sniff(html)                    [native magic-byte exprs]
-      → (optional) salted repartition by url  [shuffle 0 — input spread]
-      → stage-1 UDF: pdf→layout IR pages / html→stripped text / junk→
-        error row, routed INSIDE the Arrow batch   [one pass over blobs]
+      → (optional) salted repartition by url  [input spread, before parse]
+      → stage-1 UDF: pdf→per-page anchors (linearized where parsed) /
+        html→stripped text / junk→error row, routed INSIDE the Arrow
+        batch                                 [the one Python pass]
       → posexplode page array → one row per (url, page)
-      → repartition(url, page)                [shuffle 1 — skew defusal:
-        a 1000-page document's pages fan out across all tasks; the page
-        number acts as the salt on the url hash]
-      → linearize anchor UDF (no-op for html/junk rows)
-      → groupBy(url) assembly                 [shuffle 2 — the reducer]
+      → groupBy(url) assembly                 [the one exchange]
+
+``PipelineConfig.page_spread`` restores the skew-spread variant: pdfs
+above ``spread_page_threshold`` pages leave stage 1 as layout IR, a
+repartition(url, page) fans their pages out (the page number salts the
+url hash) and a second UDF linearizes them before assembly.
 
 Why not filter-per-kind branches + union: Catalyst pushes each branch's
 kind-filter beneath the repartition, producing three FileScans of the
@@ -22,8 +24,8 @@ full BINARY column — a 3x read of the 100 TB input (observed via
 inside the batch keeps one scan and one Arrow exchange.
 
 Column discipline: the blob column is dropped at the explode boundary;
-the page-spread shuffle moves parsed IR (elements/stripped text), not
-raw payload bytes.
+every post-parse exchange moves anchors, stripped text or layout IR,
+never raw payload bytes.
 """
 
 from __future__ import annotations
@@ -42,6 +44,8 @@ from ..functions.udfs import (
 from ..plans.session import PipelineConfig
 
 PAGE_COLUMNS = ["url", "kind", "page", "anchor_text", "text", "success", "error"]
+# stage-1 spread threshold that no document exceeds (Spark int max)
+_INLINE_ALL_PAGES = 2**31 - 1
 
 
 def classify_pages(pages: DataFrame) -> DataFrame:
@@ -59,28 +63,27 @@ def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -
 
     base = classify_pages(pages).select("url", "kind", "html")
 
-    # Adaptive unsplittable-input guard (r6, shared with the corpus
-    # operators): the parse stage below runs on the SCAN partitions,
-    # and a single-file/few-row-group pages table caps it at the
-    # row-group count (measured: 4 parse tasks on 32 cores at the
-    # sf1.0 bench tier). The spread only fires when the input provably
-    # cannot feed the cluster (files < cores AND total bytes < cores ×
-    # maxPartitionBytes) — a well-laid-out 100 TB corpus never pays
-    # this blob shuffle; the salt_buckets config below remains the
-    # explicit dial for big clustered inputs.
-    from .dedup import _maybe_spread
-
-    base = _maybe_spread(base, "url")
-
     if config.salt_buckets:
         # Optional pre-parse spread for pathologically clustered inputs
         # (e.g. one input file holding all giant documents). Costs a
-        # full shuffle of the raw blobs — the default relies on
-        # spark.sql.files.maxPartitionBytes for input balance and
-        # defuses skew after parsing, where rows are smaller.
+        # full shuffle of the raw blobs, so it replaces the unsplittable-
+        # input guard below rather than stacking a second blob exchange.
         salt = F.pmod(F.xxhash64("url"), F.lit(config.salt_buckets))
         base = base.repartition(n_spread, F.xxhash64("url", salt))
+    else:
+        # Unsplittable-input guard (r6, shared with the corpus
+        # operators): the parse runs on the scan partitions, so a
+        # single-file pages table would cap it at its row-group count.
+        # Fires only when the input provably cannot feed the cluster
+        # (files < cores AND bytes < cores × maxPartitionBytes).
+        from .dedup import _maybe_spread
 
+        base = _maybe_spread(base, "url")
+
+    # Without the page spread every pdf linearizes where it was parsed:
+    # no layout IR leaves stage 1 and no page row crosses into Python a
+    # second time.
+    threshold = config.spread_page_threshold if config.page_spread else _INLINE_ALL_PAGES
     staged = base.select(
         "url",
         "kind",
@@ -90,31 +93,29 @@ def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -
                 "kind",
                 "html",
                 F.lit(config.anchor_budget),
-                F.lit(config.spread_page_threshold),
+                F.lit(threshold),
             )
         ).alias("_pos", "pg"),
     ).select("url", "kind", "pg.page", "pg.mediabox", "pg.elements", "pg.text", "pg.error")
 
-    # Spread exchange before the remaining CPU-heavy work. Bounded docs
-    # already carry their final (budget-capped) anchor text, so the
-    # exchange moves small strings; the skew cohort's element IR fans
-    # out across all tasks. Config-gated after a measured A/B at the
-    # scaling tier (BENCH.md round 2): at 32 cores the exchange WINS
-    # big (best 19.6k vs 13.5k docs/s — parse-stage stragglers decouple
-    # from assembly+write and AQE re-balances at the boundary); at 8
-    # cores it is noise-level negative. Default on.
-    spread = (
-        staged.repartition(n_spread, "url", "page") if config.page_spread else staged
-    )
+    if config.page_spread:
+        # Spread exchange before linearizing the skew cohort: bounded
+        # docs already carry their budget-capped anchors, so the
+        # exchange moves small strings while a giant document's element
+        # IR fans out across all tasks. Measured A/B at the scaling tier
+        # (BENCH.md round 2): a win at 32 cores (best 19.6k vs 13.5k
+        # docs/s), noise-level negative at 8.
+        staged = staged.repartition(n_spread, "url", "page")
+        anchor = F.when(
+            F.col("elements").isNotNull(),
+            linearize_anchor_udf(
+                "url", "page", "mediabox", "elements", F.lit(config.anchor_budget)
+            ),
+        ).otherwise(F.col("text"))
+    else:
+        anchor = F.col("text")
 
-    anchor = F.when(
-        F.col("elements").isNotNull(),
-        linearize_anchor_udf(
-            "url", "page", "mediabox", "elements", F.lit(config.anchor_budget)
-        ),
-    ).otherwise(F.col("text"))
-
-    return spread.withColumn("anchor_or_text", anchor).select(
+    return staged.withColumn("anchor_or_text", anchor).select(
         "url",
         "kind",
         "page",

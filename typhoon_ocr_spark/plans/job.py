@@ -27,6 +27,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from dataclasses import replace
 
 from pyspark.sql import functions as F
 
@@ -44,8 +45,10 @@ def main(argv=None) -> int:
     parser.add_argument("--buckets", type=int, default=64,
                         help="manifest buckets (resumable mode)")
     parser.add_argument("--anchor-budget", type=int, default=4000)
-    parser.add_argument("--spread-threshold", type=int, default=32,
-                        help="docs above this many pages take the skew-spread path")
+    parser.add_argument("--spread-threshold", type=int, default=None,
+                        help="turn on the page spread: docs above this many pages "
+                             "fan out by page before linearize (default: off, every "
+                             "pdf linearizes where it is parsed)")
     parser.add_argument("--pages", default=None,
                         help="page expression, e.g. '1-3,5' (PDF page filter)")
     parser.add_argument("--page-level", action="store_true",
@@ -76,10 +79,11 @@ def main(argv=None) -> int:
 
     spark = build_session(app_name="typhoon-ocr-spark-job", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
-    config = PipelineConfig(
-        anchor_budget=args.anchor_budget,
-        spread_page_threshold=args.spread_threshold,
-    )
+    config = PipelineConfig(anchor_budget=args.anchor_budget)
+    if args.spread_threshold is not None:
+        config = replace(
+            config, page_spread=True, spread_page_threshold=args.spread_threshold
+        )
 
     page_transform = None
     if args.endpoint_url:

@@ -1,8 +1,8 @@
 """SparkSession builder with scale-oriented defaults.
 
 Tuned for the engine's workload profile (SURVEY.md §4.2): BINARY page
-payloads flowing through Arrow into pandas UDFs, two shuffles (salted
-spread + per-url assembly), AQE for runtime coalescing/skew handling.
+payloads flowing through Arrow into pandas UDFs, one shuffle (per-url
+assembly) plus opt-in spreads, AQE for runtime coalescing/skew handling.
 
 On a real cluster the same confs apply unchanged; only master/executor
 sizing comes from spark-submit (the engine never hardcodes cluster
@@ -170,15 +170,11 @@ class PipelineConfig:
     figure_language: str = "Thai"
     spread_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     salt_buckets: int = 0          # extra salt for the pre-parse spread; 0=off
-    # documents up to this many pages linearize inline in the parse
-    # task (their element IR never shuffles); larger documents emit raw
-    # layout IR and fan out across the cluster before linearize
+    # page_spread=True: documents above spread_page_threshold pages
+    # leave the parse as layout IR, fan out by repartition(url, page)
+    # and linearize in a second UDF. Off by default: every pdf then
+    # linearizes where it was parsed, one Python pass and one exchange
+    # per document. The spread won at 32 cores (BENCH.md round 2: best
+    # 19.6k vs 13.5k docs/s); on 4 cores it cut docs/s ~2.7x (CHANGES.md).
     spread_page_threshold: int = 32
-    # page-spread exchange between parse and linearize. Measured A/B at
-    # the scaling tier (240k docs, interleaved; BENCH.md round 2): at
-    # 32 cores the exchange is a clear win (best 19.6k vs 13.5k docs/s
-    # — it decouples the skew-heavy parse stage from assembly+write and
-    # gives AQE a coalesce point), at 8 cores it is noise-level
-    # negative (10.6k vs 11.1k). Default on; turn off for small-core
-    # runs over corpora with no giant documents.
-    page_spread: bool = True
+    page_spread: bool = False
