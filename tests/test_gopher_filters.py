@@ -168,3 +168,31 @@ def test_stats_operators_are_map_only(spark, tmp_path):
         assert plan_n.count("Exchange") == 1 and "REPARTITION_BY_NUM" in plan_n, (
             op.__name__
         )
+
+
+def test_in_memory_frame_plans_no_spread(docs):
+    """A source with no input files (an in-memory frame) has no file
+    layout for the unsplittable-input guard to judge: the operator
+    stays map-only instead of falling through to a shuffle."""
+    plan = textstats.gopher_quality(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
+def test_spread_gate_reads_byte_suffixed_split_size(spark, tmp_path):
+    """maxPartitionBytes given as "128m" means 128 MiB, as Spark reads
+    it: one small file under it is starved input and gets exactly the
+    gated spread (read as 128 bytes, the file would look too big)."""
+    path = str(tmp_path / "one_file.parquet")
+    spark.createDataFrame(
+        [(i, f"{DOC_MIXED} {i}") for i in range(64)], "doc_id long, text string"
+    ).coalesce(1).write.parquet(path)
+    src = spark.read.parquet(path)
+    assert len(src.inputFiles()) == 1
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "128m")
+    try:
+        plan = textstats.gopher_quality(src)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert plan.count("Exchange") == 1 and "REPARTITION_BY_NUM" in plan

@@ -190,20 +190,41 @@ def test_job_level_observation_counters(spark, fixture_dir):
     assert counters["n_errors"] >= counters["n_junk"]
 
 
+ZERO_PAGE_PDF = (
+    b"%PDF-1.4\n1 0 obj<</Type/Catalog/Pages 2 0 R>>endobj\n"
+    b"2 0 obj<</Type/Pages/Kids[]/Count 0>>endobj\ntrailer<</Root 1 0 R>>\n%%EOF"
+)
+
+
 def test_error_rows_not_failures(spark):
     """Broken payloads yield success=false rows, never task failures
-    (mirrors /root/reference/backend/services/ocr_service.py:254-262)."""
+    (mirrors /root/reference/backend/services/ocr_service.py:254-262);
+    the per-page pdf operators yield no rows for them."""
+    from typhoon_ocr_spark.operators.extract import (
+        extract_pdf_tables,
+        ocr_message_fingerprints,
+        page_render_fingerprints,
+    )
+    from typhoon_ocr_spark.oracle.docpipe import extract_document
+
     rows = [
         ("u1", bytearray(b"%PDF-1.4 but broken")),
         ("u2", bytearray(b"\x00\xffjunk")),
         ("u3", None),
+        ("u4", bytearray(ZERO_PAGE_PDF)),
     ]
     df = spark.createDataFrame(rows, "url string, html binary")
     out = {r["url"]: r for r in extract_documents(df).collect()}
     assert not out["u1"]["success"] and out["u1"]["kind"] == "pdf"
     assert not out["u2"]["success"] and out["u2"]["kind"] == "junk"
     assert not out["u3"]["success"] and out["u3"]["kind"] == "junk"
+    assert not out["u4"]["success"] and out["u4"]["kind"] == "pdf"
     assert all(r["extracted_text"] == "" for r in out.values())
+    pages = {r["url"]: r for r in extract_pages(df).collect()}
+    assert pages["u4"]["error"] == "empty pdf"
+    assert pages["u4"]["error"] == extract_document("u4", ZERO_PAGE_PDF).pages[0].error
+    for op in (extract_pdf_tables, page_render_fingerprints, ocr_message_fingerprints):
+        assert op(df).count() == 0, op.__name__
 
 
 def test_assembly_page_order(spark):

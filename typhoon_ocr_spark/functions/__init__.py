@@ -3,30 +3,6 @@
 Every Python hot-path runs inside a pandas UDF body over whole
 pd.Series (Arrow record-batch transport) — never row-at-a-time Python
 UDFs. Anything expressible with pyspark.sql.functions stays JVM-side.
+Import from the submodules (``functions.udfs``, ``functions.textsql``,
+...) directly.
 """
-
-from .udfs import (
-    sniff_kind_col,
-    stage_pages_udf,
-    linearize_anchor_udf,
-    strip_html_udf,
-    parse_response_udf,
-    markdown_flatten_udf,
-    render_prompt_udf,
-    cleanup_text_udf,
-    PAGE_STRUCT,
-    ELEMENT_STRUCT,
-)
-
-__all__ = [
-    "sniff_kind_col",
-    "stage_pages_udf",
-    "linearize_anchor_udf",
-    "strip_html_udf",
-    "parse_response_udf",
-    "markdown_flatten_udf",
-    "render_prompt_udf",
-    "cleanup_text_udf",
-    "PAGE_STRUCT",
-    "ELEMENT_STRUCT",
-]

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -39,7 +40,7 @@ from ..oracle.mdflatten import markdown_to_plain_text
 from ..oracle.pdfmini import parse_pdf
 from ..oracle.prompts import render_prompt
 from ..oracle.respparse import parse_response_text
-from ..oracle.textops import cleanup_element_text, is_base64_string
+from ..oracle.textops import is_base64_string
 
 # ---------------------------------------------------------------------------
 # Schemas
@@ -143,13 +144,23 @@ def _page_row(page: int, mediabox=None, elements=None, text=None, error=None) ->
             "text": text, "error": error}
 
 
-def _parse_pdf_rows(url: str, blob: bytes, budget: int, spread_threshold: int) -> list:
+def _parse_pdf_reports(blob: bytes) -> tuple:
+    """The one ``parse_pdf`` call of the Spark path: (page reports,
+    None) or ([], error) — an unparseable payload or a zero-page pdf
+    is an error, never an exception."""
     try:
         reports = parse_pdf(blob)
     except Exception as exc:
-        return [_page_row(1, error=f"Error processing document: {exc}")]
+        return [], f"Error processing document: {exc}"
     if not reports:
-        return [_page_row(1, error="empty pdf")]
+        return [], "empty pdf"
+    return reports, None
+
+
+def _parse_pdf_rows(url: str, blob: bytes, budget: int, spread_threshold: int) -> list:
+    reports, error = _parse_pdf_reports(blob)
+    if error is not None:
+        return [_page_row(1, error=error)]
     if len(reports) <= spread_threshold:
         # linearize where parsed: no element IR ever leaves this task
         return [
@@ -220,108 +231,77 @@ def stage_pages_udf(
     )
 
 
-TABLE_PAGE_STRUCT = StructType(
-    [
-        StructField("page", IntegerType()),
-        StructField("table_md", StringType()),
-    ]
-)
+def _pdf_pages_udf(name: str, fields: list, derive):
+    """(url, BINARY pdf payload) → one struct per page,
+    ``(page, *derive(url, page, report))`` over ``fields``. Each
+    payload parses once through ``_parse_pdf_reports``; null or
+    unparseable payloads yield no rows (error rows live in the main
+    pipeline). ``name`` is what plans and event logs show."""
+    keys = ["page", *(f.name for f in fields)]
 
-RENDER_PAGE_STRUCT = StructType(
-    [
-        StructField("page", IntegerType()),
-        StructField("render_w", IntegerType()),
-        StructField("render_h", IntegerType()),
-        StructField("render_sha", StringType()),
-    ]
-)
+    def pages_udf(url: pd.Series, payload: pd.Series) -> pd.Series:
+        def one(u: str, blob: Optional[bytes]) -> list:
+            if blob is None:
+                return []
+            reports, _ = _parse_pdf_reports(bytes(blob))
+            return [
+                dict(zip(keys, (idx, *derive(u, idx, report))))
+                for idx, report in enumerate(reports, start=1)
+            ]
+
+        return pd.Series([one(u, b) for u, b in zip(url, payload)], dtype="object")
+
+    pages_udf.__name__ = name
+    return pandas_udf(
+        ArrayType(StructType([StructField("page", LongType()), *fields]))
+    )(pages_udf)
 
 
-@pandas_udf(ArrayType(RENDER_PAGE_STRUCT))
-def page_renders_udf(payload: pd.Series) -> pd.Series:
-    """BINARY pdf payload → per-page layout raster fingerprints: each
-    page renders to a real grayscale PNG (oracle/render.py — the
-    engine's render_pdf_to_base64png path, ocr_utils.py:119-146) and
-    reports (dims, sha256 of the PNG bytes). The blob itself never
-    leaves the task — downstream carries 64-byte fingerprints."""
+def _page_render(url: str, page: int, report: PageReport) -> tuple:
+    """Real grayscale PNG render of the page (oracle/render.py — the
+    engine's render_pdf_to_base64png path, ocr_utils.py:119-146) as
+    (dims, sha256 of the PNG bytes): the blob never leaves the task."""
     import hashlib
 
-    from ..oracle.render import render_page_bitmap
     from ..oracle.images import encode_png_gray
+    from ..oracle.render import render_page_bitmap
 
-    def one(blob: Optional[bytes]) -> list:
-        if blob is None:
-            return []
-        try:
-            reports = parse_pdf(bytes(blob))
-        except Exception:
-            return []
-        out = []
-        for idx, report in enumerate(reports, start=1):
-            w, h, pixels = render_page_bitmap(report)
-            png = encode_png_gray(w, h, pixels)
-            out.append(
-                {"page": idx, "render_w": w, "render_h": h,
-                 "render_sha": hashlib.sha256(png).hexdigest()}
-            )
-        return out
-
-    return payload.map(one)
+    w, h, pixels = render_page_bitmap(report)
+    return w, h, hashlib.sha256(encode_png_gray(w, h, pixels)).hexdigest()
 
 
-MESSAGE_PAGE_STRUCT = StructType(
-    [
-        StructField("page", IntegerType()),
-        StructField("message_sha", StringType()),
-    ]
-)
-
-
-@pandas_udf(ArrayType(MESSAGE_PAGE_STRUCT))
-def ocr_message_shas_udf(url: pd.Series, payload: pd.Series) -> pd.Series:
-    """BINARY pdf payload → per-page sha256 of the COMPLETE LLM request
-    envelope (prompt + base64 page render; prepare_ocr_messages,
-    ocr_utils.py:582-619). The multi-KB envelope never leaves the task
-    — only its 64-hex fingerprint does."""
+def _page_message_sha(url: str, page: int, report: PageReport) -> tuple:
+    """sha256 of the COMPLETE LLM request envelope (prompt + base64
+    page render; prepare_ocr_messages, ocr_utils.py:582-619) — only
+    the 64-hex fingerprint leaves the task."""
     from ..oracle.render import page_ocr_message_sha
 
-    def one(u, blob):
-        if blob is None:
-            return []
-        try:
-            reports = parse_pdf(bytes(blob))
-        except Exception:
-            return []
-        return [
-            {"page": idx, "message_sha": page_ocr_message_sha(u, report, idx)}
-            for idx, report in enumerate(reports, start=1)
-        ]
-
-    return pd.Series([one(u, b) for u, b in zip(url, payload)], dtype="object")
+    return (page_ocr_message_sha(url, report, page),)
 
 
-@pandas_udf(ArrayType(TABLE_PAGE_STRUCT))
-def page_tables_udf(payload: pd.Series) -> pd.Series:
-    """BINARY pdf payload → per-page markdown tables via deterministic
-    table-cell grouping (oracle/tables.py — the north star's
-    "table-cell grouping into markdown tables"). Pages whose runs don't
-    form a grid yield table_md NULL; parse failures yield no rows
-    (error handling lives in the main pipeline)."""
+def _page_table(url: str, page: int, report: PageReport) -> tuple:
+    """Markdown table via deterministic table-cell grouping
+    (oracle/tables.py); NULL when the page's runs don't form a grid."""
     from ..oracle.tables import detect_table
 
-    def one(blob: Optional[bytes]) -> list:
-        if blob is None:
-            return []
-        try:
-            reports = parse_pdf(bytes(blob))
-        except Exception:
-            return []
-        return [
-            {"page": idx, "table_md": detect_table(report.text_elements)}
-            for idx, report in enumerate(reports, start=1)
-        ]
+    return (detect_table(report.text_elements),)
 
-    return payload.map(one)
+
+page_renders_udf = _pdf_pages_udf(
+    "page_renders_udf",
+    [
+        StructField("render_w", LongType()),
+        StructField("render_h", LongType()),
+        StructField("render_sha", StringType()),
+    ],
+    _page_render,
+)
+ocr_message_shas_udf = _pdf_pages_udf(
+    "ocr_message_shas_udf", [StructField("message_sha", StringType())], _page_message_sha
+)
+page_tables_udf = _pdf_pages_udf(
+    "page_tables_udf", [StructField("table_md", StringType())], _page_table
+)
 
 
 @pandas_udf(StringType())
@@ -363,21 +343,6 @@ def linearize_anchor_udf(
 
 
 @pandas_udf(StringType())
-def strip_html_udf(payload: pd.Series) -> pd.Series:
-    """BINARY html payload → boilerplate-stripped main-content text."""
-
-    def one(blob: Optional[bytes]) -> Optional[str]:
-        if blob is None:
-            return None
-        try:
-            return strip_html_boilerplate(bytes(blob))
-        except Exception:
-            return None
-
-    return payload.map(one)
-
-
-@pandas_udf(StringType())
 def parse_response_udf(raw: pd.Series) -> pd.Series:
     """Model-response → final text (ocr_service.py:156-190)."""
     return raw.map(parse_response_text)
@@ -396,12 +361,6 @@ def render_prompt_udf(task_type: pd.Series, anchor: pd.Series) -> pd.Series:
         [render_prompt(t, a if a is not None else "") for t, a in zip(task_type, anchor)],
         dtype="object",
     )
-
-
-@pandas_udf(StringType())
-def cleanup_text_udf(text: pd.Series) -> pd.Series:
-    """Element-text cleanup (ocr_utils.py:266-276) exposed standalone."""
-    return text.map(lambda s: cleanup_element_text(s) if s is not None else None)
 
 
 @pandas_udf(BooleanType())

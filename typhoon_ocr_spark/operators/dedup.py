@@ -10,10 +10,10 @@ __spark_entry__ built from the same constants
 Scale notes:
 - exact dedup is a hash groupBy — one shuffle on a 32-char key, with
   map-side partial aggregation;
-- minhash signatures are computed per-row (no shuffle) from word
-  shingles; candidate pairs are a self-equi-join on (band, band_hash)
-  — the classic banding trick keeps the join fan-out tiny vs a full
-  cross join;
+- MinHash band hashes come from ONE mapInArrow pass per document
+  (no shuffle; ``_bands_of_shingles``, also behind the streaming twin);
+  candidate pairs group by (band, band_hash) bucket — the classic
+  banding trick keeps the fan-out tiny vs a full cross join;
 - all hashes are md5 hex strings and minima are lexicographic, chosen
   for engine-portability (no 64-bit int conversions).
 """
@@ -50,8 +50,8 @@ def _maybe_spread(df: DataFrame, key: str) -> DataFrame:
     the cluster: fewer input files than cores AND total input under
     cores × maxPartitionBytes (so the spread can never move more than
     one task-sized split per core — at 100 TB the gate never fires and
-    no exchange is added). Non-file sources and non-local stores are
-    left untouched."""
+    no exchange is added). Sources without input files (in-memory
+    frames) and non-local stores are left untouched."""
     import os
     from urllib.parse import unquote, urlparse
 
@@ -62,8 +62,8 @@ def _maybe_spread(df: DataFrame, key: str) -> DataFrame:
     try:
         files = list(df.inputFiles())
     except Exception:
-        files = []
-    if len(files) >= par:
+        return df
+    if not files or len(files) >= par:
         return df
     total = 0
     for f in files:
@@ -73,14 +73,9 @@ def _maybe_spread(df: DataFrame, key: str) -> DataFrame:
             total += os.path.getsize(unquote(urlparse(f).path))
         except OSError:
             return df
-    max_pb = int(
-        "".join(
-            c for c in spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"
-            ) if c.isdigit()
-        )
-    )
-    if files and total > par * max_pb:
+    # Spark's own parse of the conf, byte suffixes ("128m", "1g") included
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if total > par * max_pb:
         return df
     return df.repartition(par, F.col(key))
 
@@ -146,40 +141,6 @@ def exact_dup_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
             F.min("doc_id").alias("keeper_id"),
         )
     )
-
-
-def minhash_signatures(
-    documents: DataFrame,
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Per-document MinHash signature: one md5 per shingle, sliced into
-    MINHASH_PERMS 4-hex windows; sig_p = min over shingles of slice p
-    ("one permutation hashing" family — 8x fewer hash calls than
-    hash-per-permutation, measured ~2x faster end-to-end at sf0.1).
-    Documents with <SHINGLE_WORDS tokens are excluded. Pass a
-    (possibly persisted) ``shingle_frame`` result as ``shingles`` to
-    share the tokenize+shingle lineage with other consumers.
-    Output: (doc_id, sig_0..sig_{P-1})."""
-    sh = shingles if shingles is not None else shingle_frame(documents, text_col)
-    exploded = sh.select(
-        "doc_id",
-        F.explode(F.transform(F.col("sh"), lambda x: F.md5(x))).alias("h"),
-    )
-
-    # Shape note: explode(shingles) → groupBy(doc_id).agg(min × P),
-    # not array_min(transform(...)) × P — Catalyst's projection
-    # collapse inlines the token/shingle expressions into every sig in
-    # the nested form (observed ~60 s of planning/codegen at bench
-    # scale), while the explode form computes shingles once per row,
-    # runs the P minima as map-side partial aggregates, and lets the
-    # LSH self-join reuse one exchange for both sides.
-    def sig(p: int):
-        return F.min(
-            F.substring(F.col("h"), p * MINHASH_SLICE_HEX + 1, MINHASH_SLICE_HEX)
-        ).alias(f"sig_{p}")
-
-    return exploded.groupBy("doc_id").agg(*[sig(p) for p in range(MINHASH_PERMS)])
 
 
 def _bands_of_shingles(sh: list) -> list:

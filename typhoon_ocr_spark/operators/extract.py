@@ -26,6 +26,12 @@ inside the batch keeps one scan and one Arrow exchange.
 Column discipline: the blob column is dropped at the explode boundary;
 every post-parse exchange moves anchors, stripped text or layout IR,
 never raw payload bytes.
+
+The per-page pdf operators (markdown tables, render and OCR-message
+fingerprints) share ``_pdf_page_frame``: one pruned scan, pdf rows
+only, and one UDF whose per-page outputs all derive from the single
+parse of each payload (``functions.udfs._parse_pdf_reports``, also the
+stage-1 pdf branch).
 """
 
 from __future__ import annotations
@@ -130,18 +136,26 @@ def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -
     )
 
 
-def extract_pdf_tables(pages: DataFrame) -> DataFrame:
-    """Deterministic table extraction: pdf payloads → one row per page
-    whose positioned runs form a grid, rendered as GitHub markdown
-    (oracle/tables.py clustering; the north star's "table-cell grouping
-    into markdown tables"). Single scan, kind-routed natively, pdf
-    payloads only reach the parse UDF. Output: (url, page, table_md)."""
+def _pdf_page_frame(pages: DataFrame, udf, cols: list) -> DataFrame:
+    """pdf payloads → one row per page, (url, page, *cols), from one of
+    the per-page pdf UDFs (functions/udfs.py ``_pdf_pages_udf``).
+    Single scan pruned to url+html, kind-routed natively so only pdf
+    payloads reach the parse; unparseable pdfs yield no rows."""
     base = classify_pages(pages).select("url", "kind", "html")
     return (
         base.filter(F.col("kind") == "pdf")
-        .select("url", F.explode(page_tables_udf("html")).alias("pt"))
-        .select("url", F.col("pt.page").cast("long").alias("page"), "pt.table_md")
-        .filter(F.col("table_md").isNotNull())
+        .select("url", F.explode(udf("url", "html")).alias("pg"))
+        .select("url", "pg.page", *[f"pg.{c}" for c in cols])
+    )
+
+
+def extract_pdf_tables(pages: DataFrame) -> DataFrame:
+    """Deterministic table extraction: one row per pdf page whose
+    positioned runs form a grid, rendered as GitHub markdown
+    (oracle/tables.py clustering; the north star's "table-cell grouping
+    into markdown tables"). Output: (url, page, table_md)."""
+    return _pdf_page_frame(pages, page_tables_udf, ["table_md"]).filter(
+        F.col("table_md").isNotNull()
     )
 
 
@@ -149,19 +163,9 @@ def page_render_fingerprints(pages: DataFrame) -> DataFrame:
     """Layout rasters for every pdf page: real PNG render per page
     (oracle/render.py), surfaced as (url, page, render_w, render_h,
     render_sha) — the fingerprint proves the render path end-to-end
-    without shipping image blobs through the plan. Single scan, pruned
-    to url+html, pdf rows only reach the UDF."""
-    base = classify_pages(pages).select("url", "kind", "html")
-    return (
-        base.filter(F.col("kind") == "pdf")
-        .select("url", F.explode(page_renders_udf("html")).alias("pr"))
-        .select(
-            "url",
-            F.col("pr.page").cast("long").alias("page"),
-            F.col("pr.render_w").cast("long").alias("render_w"),
-            F.col("pr.render_h").cast("long").alias("render_h"),
-            "pr.render_sha",
-        )
+    without shipping image blobs through the plan."""
+    return _pdf_page_frame(
+        pages, page_renders_udf, ["render_w", "render_h", "render_sha"]
     )
 
 
@@ -171,12 +175,7 @@ def ocr_message_fingerprints(pages: DataFrame) -> DataFrame:
     — the engine-side prepare_ocr_messages, proven end-to-end by sha
     without shuffling multi-KB envelopes. Output: (url, page,
     message_sha)."""
-    base = classify_pages(pages).select("url", "kind", "html")
-    return (
-        base.filter(F.col("kind") == "pdf")
-        .select("url", F.explode(ocr_message_shas_udf("url", "html")).alias("pm"))
-        .select("url", F.col("pm.page").cast("long").alias("page"), "pm.message_sha")
-    )
+    return _pdf_page_frame(pages, ocr_message_shas_udf, ["message_sha"])
 
 
 def assemble_documents(page_frame: DataFrame) -> DataFrame:

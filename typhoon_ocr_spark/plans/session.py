@@ -166,8 +166,6 @@ class PipelineConfig:
     Broadcast to executors as plain literals in the plan."""
 
     anchor_budget: int = 4000      # ocr_utils.py:391 library default
-    task_type: str = "default"
-    figure_language: str = "Thai"
     spread_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     salt_buckets: int = 0          # extra salt for the pre-parse spread; 0=off
     # page_spread=True: documents above spread_page_threshold pages
